@@ -13,9 +13,10 @@ consumes the candidate rows, collapses them to ONE ROW PER POINT
 (doc_id, gps_idx, time, gc_prev, cands: array<struct>) with an in-partition
 hash aggregation — the (doc_id, gps_idx) grouping is satisfied by the
 checkpoint's hash(doc_id) bucketing, so no exchange — then
-sortWithinPartitions + a mapInArrow Viterbi kernel. Collapsing before the
-sort/Arrow boundary removes the per-candidate duplication of the point
-attrs (~2.1 candidate rows per point at fixture density), and the
+sortWithinPartitions + a mapInArrow Viterbi kernel, coalesced to one task
+per core. Collapsing before the sort/Arrow boundary removes the
+per-candidate duplication of the point attrs (~2.1 candidate rows per
+point at fixture density), and the
 transition model consumes ``gc_prev`` (the adjacent-pair great-circle the
 trace filter already computes in its window pass) instead of re-deriving it
 from (lon, lat) — together ~45%% less data through the traversal stage's
@@ -692,11 +693,12 @@ def _runs_to_arrow(out: pd.DataFrame) -> pa.RecordBatch:
 
 
 def _viterbi_partition_arrow(batches):
-    """mapInArrow kernel: one-row-per-point batches arrive sorted by
-    (doc_id, gps_idx) with the candidate struct array pre-sorted by
-    (dist_m, edge_id) (JVM array_sort). A doc can straddle two Arrow
-    batches of the same partition, so the last (possibly incomplete) doc
-    of each batch is buffered into the next.
+    """mapInArrow kernel: one-row-per-point batches arrive as sorted
+    (doc_id, gps_idx) runs — one run per hash partition the coalesced task
+    holds, so every doc's rows are contiguous — with the candidate struct
+    array pre-sorted by (dist_m, edge_id) (JVM array_sort). A doc can
+    straddle two Arrow batches of the same task, so the last (possibly
+    incomplete) doc of each batch is buffered into the next.
     """
     buf: pa.Table | None = None
     for rb in batches:
@@ -752,8 +754,9 @@ def match_traces(
     orders by (dist_m, edge_id), the kernels' deterministic tie-break.
     Then one repartition by doc_id (ELIDED when the input already carries
     hash(doc_id) partitioning, e.g. reading the bucketed filtered_points
-    checkpoint), sortWithinPartitions(doc_id, gps_idx), and a mapInArrow
-    Viterbi over the point rows. vs the flat-row round-2 form this sends
+    checkpoint), sortWithinPartitions(doc_id, gps_idx), a narrow coalesce
+    to ``defaultParallelism`` tasks, and a mapInArrow Viterbi over the
+    point rows. vs the flat-row round-2 form this sends
     ~45% fewer bytes through the stage's sort + Arrow boundary (point
     attrs once per point instead of once per candidate; gc_prev instead
     of lon+lat).
@@ -776,7 +779,8 @@ def match_traces(
                 "output or matching.with_gps_index(points)"
             )
     spark = points.sparkSession
-    p = num_partitions or spark.sparkContext.defaultParallelism
+    cores = spark.sparkContext.defaultParallelism
+    p = num_partitions or cores
     cand_struct = F.struct(*[F.col(f) for f in CAND_STRUCT_FIELDS])
     # repartition FIRST: hash(doc_id, p) satisfies the aggregation's
     # (doc_id, gps_idx) clustering as a subset, so the agg runs
@@ -792,13 +796,23 @@ def match_traces(
             F.array_sort(F.collect_list(cand_struct)).alias("cands"),
         )
         .sortWithinPartitions("doc_id", "gps_idx")
+        # narrow coalesce: each Python task takes whole hash partitions
+        # back to back (a doc never spans two), so the kernel pays its
+        # per-task fixed cost once per core, not once per partition
+        .coalesce(cores)
     )
     runs = per_point.mapInArrow(
         _viterbi_partition_arrow, schema=RUN_SCHEMA
     )
-    meta = points.groupBy("doc_id").agg(
-        F.min_by("time", "offset").alias("t0"),
-        F.count(F.lit(1)).cast("int").alias("n_points"),
+    # the per-doc stats get the same one-task-per-core treatment; the
+    # coalesce drops hash partitioning, which the broadcast join ignores
+    meta = (
+        points.groupBy("doc_id")
+        .agg(
+            F.min_by("time", "offset").alias("t0"),
+            F.count(F.lit(1)).cast("int").alias("n_points"),
+        )
+        .coalesce(cores)
     )
     out = runs.join(meta, "doc_id")  # AQE broadcasts the per-doc side
     return out.select(

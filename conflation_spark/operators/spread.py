@@ -8,6 +8,10 @@ single files). The guard adds ONE deterministic hash repartition up to the
 session's parallelism only in that case — on a real multi-file table the
 scan already has enough partitions and the guard is a no-op, so nothing
 here is tuned to local[32]; it adapts to ``defaultParallelism``.
+
+The guard reads the scan's task count off the physical plan's leaves. It
+never touches ``df.rdd``: under AQE that runs every upstream shuffle
+stage of a derived frame eagerly, then throws the results away.
 """
 
 from __future__ import annotations
@@ -21,14 +25,25 @@ def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     per-row work. Hashes on ``key_cols`` when given (deterministic under
     task retries — guide §2.5 — and rule-10 subset co-partitioning lets
     later groupBys on the same key reuse the exchange); round-robin
-    otherwise. No-op when the input already has enough partitions."""
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= p:
+    otherwise. No-op when the input's leaf scans already have enough
+    partitions."""
+    p = df.sparkSession.sparkContext.defaultParallelism
+    if scan_partitions(df) >= p:
         return df
     if key_cols:
         return df.repartition(p, *[F.col(c) for c in key_cols])
     return df.repartition(p)
+
+
+def scan_partitions(df: DataFrame) -> int:
+    """Scan tasks of ``df``'s leaves (file scans, checkpoints, local
+    rows), summed over the leaves. Building a leaf's RDD plans its splits
+    on the driver and starts no Spark job."""
+    plan = df._jdf.queryExecution().sparkPlan()
+    leaves = df.sparkSession._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        plan.collectLeaves()
+    )
+    return sum(leaf.execute().getNumPartitions() for leaf in leaves)
 
 
 def local_df(spark, rows, schema: str) -> DataFrame:

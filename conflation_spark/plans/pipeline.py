@@ -69,12 +69,15 @@ def _write_stage(
         # with ZERO additional shuffles. repartition first so each bucket
         # is exactly one file (Spark only trusts per-bucket sort order
         # then, and the file count stays n_buckets instead of
-        # tasks x buckets).
+        # tasks x buckets); then a narrow coalesce hands each of the
+        # session's cores whole buckets, so the stage runs one task per
+        # core and each task writes one file per bucket it holds.
         spark = df.sparkSession
         tbl = _table_name(work_dir, stage)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         (
             df.repartition(n_buckets, *bucket_by)
+            .coalesce(spark.sparkContext.defaultParallelism)
             .write.mode("overwrite")
             .bucketBy(n_buckets, *bucket_by)
             .sortBy(*(sort_by or bucket_by))
@@ -151,25 +154,6 @@ def _write_stage(
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=1)
     os.rename(tmp, _lineage_path(work_dir, stage))  # atomic commit, like S9
-
-
-def write_partitioned_measurements(measurements: DataFrame, path: str) -> None:
-    """S11 analog: hive-partitioned measurements sink by (country, region)
-    (reference writes one pickle per country/region dir with uuid suffixes,
-    /root/reference/conflation/map_matching/valhalla.py:214-243 — Spark's
-    commit protocol makes the uuid collision dance unnecessary). Empty
-    regions get an explicit partition value so they round-trip."""
-    from pyspark.sql import functions as F
-
-    (
-        measurements.withColumn(
-            "region_part",
-            F.when(F.col("region") == "", "_EMPTY_").otherwise(F.col("region")),
-        )
-        .write.mode("overwrite")
-        .partitionBy("country", "region_part")
-        .parquet(path)
-    )
 
 
 def read_lineage(work_dir: str, stage: str) -> dict:
@@ -325,8 +309,9 @@ def run_pipeline(
     # Pre-partition to the BUCKET layout before the filter's windows: the
     # window's clustered-distribution requirement accepts hash(doc_id, 64),
     # and the bucketed write's own repartition then elides — so the stage
-    # still pays exactly ONE shuffle (at 64 partitions instead of
-    # shuffle_partitions), and the bucketing itself is free.
+    # still pays exactly ONE shuffle, into the 64-bucket layout, and the
+    # bucketing itself is free. Buckets are storage, not tasks: the write
+    # and the matcher coalesce them to one task per core.
     n_buckets = 64
     filtered = stage(
         "filtered_points",

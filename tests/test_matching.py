@@ -241,6 +241,45 @@ def test_arrow_kernel_equals_flat(spark, fixture_dir):
     assert np.allclose(got["end_time"], want["end_time"], atol=1e-9)
 
 
+def test_coalesced_tasks_with_straddling_batches_equal_flat(spark, fixture_dir):
+    """Through Spark: 64 hash partitions coalesced into defaultParallelism
+    tasks, with Arrow batches of 50 point rows, so each task streams
+    several sorted partition runs back to back and many docs straddle a
+    batch boundary. The traversals must equal the flat-row kernel's."""
+    from conflation_spark.operators.matching import viterbi_batch
+
+    docs = load_documents(spark, fixture_dir)
+    pts = filter_traces(decode_points(docs))
+    edges = spark.read.parquet(f"{fixture_dir}/edges.parquet")
+    cand = candidate_edges(pts, edges)
+    pdf = cand.select(
+        "doc_id", "gps_idx", "time", "gc_prev",
+        "edge_id", "src", "dst", "dist_m", "t_param", "len_m",
+    ).toPandas().sort_values(
+        ["doc_id", "gps_idx", "dist_m", "edge_id"], kind="mergesort"
+    ).reset_index(drop=True)
+    assert pdf.groupby("doc_id")["gps_idx"].nunique().gt(50).any()
+    key = ["doc_id", "edge_seq"]
+    want = viterbi_batch(pdf).sort_values(key).reset_index(drop=True)
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "50")
+    try:
+        got = match_traces(pts, cand, num_partitions=64).toPandas()
+    finally:
+        spark.conf.set(conf, old)
+    got = got.sort_values(key).reset_index(drop=True)
+
+    assert len(got) == len(want)
+    for c in ["doc_id", "edge_seq", "edge_id", "n_pts"]:
+        assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
+    assert ((got["n_points"] - got["n_unmatched"]).to_numpy()
+            == want["n_present"].to_numpy()).all()
+    assert ((want["end_time"] - got["t0"]).to_numpy()
+            == got["elapsed_time"].to_numpy()).all()
+
+
 def test_derivation_missing_edge_still_aborts(spark, fixture_dir):
     """An interior traversal whose edge_id is absent from the edges table
     must still abort the doc on dt<0 (left-join semantics); with dt>0 it is

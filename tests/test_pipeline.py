@@ -9,6 +9,7 @@ import pandas as pd
 
 from conflation_spark.plans.pipeline import read_lineage, run_pipeline
 from tests import oracle
+from tests.jobs import job_group, stage_tasks
 
 
 def _oracle_config(spark, fixture_dir, traversals_rows, edges_rows):
@@ -157,6 +158,31 @@ def test_bucketed_checkpoint_traversal_is_shuffle_free(spark, fixture_dir, tmp_p
     spark.sql(f"DROP TABLE IF EXISTS {_table_name(work, 'filtered_points')}")
     refiltered = read_stage(spark, work, "filtered_points")
     assert refiltered.count() == filtered.count()
+
+
+def test_bucketed_stages_run_one_task_per_core(spark, tmp_path):
+    """Storage buckets are not tasks: a fresh run keeps the 64-bucket
+    filtered_points layout (one file per bucket) while its bucketed write
+    and the traversal stage's MapInArrow each run in defaultParallelism
+    tasks."""
+    from conflation_spark.datagen import ensure_fixture
+
+    fixture = ensure_fixture("sf0.01")  # enough docs to fill all 64 buckets
+    cores = spark.sparkContext.defaultParallelism
+    work = str(tmp_path / "tasks_work")
+    for stop in ("filtered_points", "traversals"):
+        with job_group(spark, f"tasks_{stop}"):
+            run_pipeline(spark, fixture, work, resume=True, stop_after=stop)
+
+    assert stage_tasks(spark, "tasks_filtered_points", "WriteFiles") == [cores]
+    assert stage_tasks(spark, "tasks_traversals", "MapInArrow") == [cores]
+
+    man = read_lineage(work, "filtered_points")
+    assert man["bucketed"]["n"] == 64
+    files = [p["file"] for p in man["parts"]]
+    assert len(files) == 64
+    # bucket files are named ..._<bucket id>.c000...: each bucket exactly once
+    assert len({f.split(".")[0].rsplit("_", 1)[1] for f in files}) == 64
 
 
 def test_skew_warning_on_hot_key(spark, tmp_path):
